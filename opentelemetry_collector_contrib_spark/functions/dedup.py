@@ -5,8 +5,9 @@ Four families, all deterministic and oracle-checkable:
   * exact       — hash-groupBy on normalized text (one shuffle, map-side
                   partial agg; the Spark-native dedup).
   * minhash+LSH — shingle -> k minhashes -> banded LSH -> candidate-pair
-                  join. Hashing is md5-based so the DuckDB oracle computes
-                  the identical signatures (no engine-specific hash()).
+                  join, or star edges for connected components. Hashing
+                  is md5-based so the DuckDB oracle computes the
+                  identical signatures (no engine-specific hash()).
   * simhash     — 16-bit sign-aggregated token-hash fingerprint; near-dups
                   collide on the fingerprint.
   * n-gram Jaccard — inverted-index self-join on shingles; exact Jaccard
@@ -18,10 +19,15 @@ Scale notes (100 TB corpus):
     shuffle volume is O(doc-shingle pairs), partial aggregation collapses
     per-partition duplicates before the wire.
   * LSH banding turns the quadratic candidate problem into an equi-join
-    on band hashes; hot bands (boilerplate docs) are the skew risk — AQE
-    skew-join splitting handles moderate skew, and `lsh_pairs` caps
-    emitted pairs per band via a within-band window when `max_band_size`
-    is set (the standard guard against degenerate boilerplate clusters).
+    on band hashes. A bucket of d docs still emits d²/2 pairs through
+    `lsh_pairs`, so that pairs API caps hot buckets (boilerplate
+    clusters) at `max_band_size`; the cap applies ONLY to the pairs API.
+  * The components path (`lsh_star_edges` -> `duplicate_components`) is
+    exact and linear in bucket size: each bucket emits one star edge
+    per non-minimum member, which has the same connectivity as the
+    bucket's clique, so no cap is needed. The components loop detects
+    convergence from a changed-label count observed on the checkpoint
+    each iteration already materializes — no extra job.
   * The Jaccard join joins on individual shingles; its cost is bounded by
     the posting-list sizes, which is why it is the *verify* stage after
     LSH, not the discovery stage, at scale.
@@ -29,7 +35,7 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from .text import TOKEN_RE
 
@@ -38,6 +44,7 @@ __all__ = [
     "shingles",
     "minhash_signatures",
     "lsh_pairs",
+    "lsh_star_edges",
     "simhash",
     "jaccard_topk_pairs",
     "span_dedup",
@@ -106,29 +113,9 @@ def minhash_signatures(
     return shingle_df.groupBy(id_col).agg(*aggs)
 
 
-def lsh_pairs(
-    sig_df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    k: int = 12,
-    bands: int = 4,
-    max_band_size: int | None = 1000,
-) -> DataFrame:
-    """Banded LSH candidate pairs: docs agreeing on ALL rows of any band.
-
-    band_hash = md5 of the band's signature slice; a self-equi-join on
-    (band, band_hash) yields candidates; `a < b` + distinct dedups the
-    pair set across bands.
-
-    ``max_band_size`` (default 1000) caps the rows per (band, band_hash)
-    bucket BEFORE the self-join: a hot band of d identical boilerplate
-    docs would otherwise emit d²/2 pairs — at corpus scale one template
-    cluster can dominate the whole shuffle. The cap truncates
-    deterministically (ordered by id), so any doc past the cap still
-    pairs with nothing *through that band* but stays eligible via its
-    other bands; downstream dedup treats the capped cluster through its
-    first `max_band_size` members. Pass ``None`` to disable (exact
-    candidate set, e.g. for small corpora or oracle comparisons)."""
+def _banded(sig_df: DataFrame, *, id_col: str, k: int, bands: int) -> DataFrame:
+    """One row per (id, band, bh): bh = md5 of the band's signature
+    slice, so docs agreeing on ALL rows of a band share a bucket."""
     r = k // bands
     band_structs = [
         F.struct(
@@ -139,9 +126,35 @@ def lsh_pairs(
         )
         for b in range(bands)
     ]
-    banded = sig_df.select(
+    return sig_df.select(
         F.col(id_col), F.explode(F.array(*band_structs)).alias("e")
     ).select(id_col, "e.band", "e.bh")
+
+
+def lsh_pairs(
+    sig_df: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    k: int = 12,
+    bands: int = 4,
+    max_band_size: int | None = 1000,
+) -> DataFrame:
+    """Banded LSH candidate pairs: docs agreeing on ALL rows of any band.
+
+    A self-equi-join on (band, band_hash) yields candidates; `a < b` +
+    distinct dedups the pair set across bands.
+
+    ``max_band_size`` (default 1000) caps the rows per (band, band_hash)
+    bucket BEFORE the self-join: a hot band of d identical boilerplate
+    docs would otherwise emit d²/2 pairs — at corpus scale one template
+    cluster can dominate the whole shuffle. The cap truncates
+    deterministically (ordered by id), so any doc past the cap pairs
+    with nothing *through that band* and stays eligible only via its
+    other bands: the capped pair set under-reports hot clusters. Pass
+    ``None`` to disable (exact candidate set). The cap applies only to
+    this pairs API; for one survivor per near-dup cluster use
+    ``lsh_star_edges``, which is exact and linear in bucket size."""
+    banded = _banded(sig_df, id_col=id_col, k=k, bands=bands)
     if max_band_size is not None:
         w = Window.partitionBy("band", "bh").orderBy(id_col)
         banded = banded.withColumn("_rn", F.row_number().over(w)).filter(
@@ -159,6 +172,28 @@ def lsh_pairs(
         .select(
             F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
         )
+        .distinct()
+    )
+
+
+def lsh_star_edges(
+    sig_df: DataFrame, *, id_col: str = "doc_id", k: int = 12, bands: int = 4
+) -> DataFrame:
+    """Banded LSH edges for connected components: each (band, band_hash)
+    bucket emits one edge ``(min_member, member)`` per non-minimum
+    member, in the ``doc_a``/``doc_b`` schema of ``lsh_pairs``.
+
+    A star and a clique over the same bucket connect the same vertices,
+    so ``duplicate_components`` over these edges equals the components
+    of the UNCAPPED ``lsh_pairs`` graph exactly — with d - 1 edges per
+    bucket of d docs instead of d²/2, one window shuffle instead of a
+    self-join, and no cap. Edges repeated across bands are emitted once.
+    """
+    w = Window.partitionBy("band", "bh")
+    return (
+        _banded(sig_df, id_col=id_col, k=k, bands=bands)
+        .select(F.min(id_col).over(w).alias("doc_a"), F.col(id_col).alias("doc_b"))
+        .filter(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
 
@@ -366,11 +401,15 @@ def duplicate_components(
     neighbors' labels) until a fixpoint, the alternating-star
     simplification that suffices because near-dup components are small
     and dense (template/boilerplate clusters), so the diameter — the
-    iteration bound — is tiny in practice. Each iteration is ONE
+    iteration bound — is tiny in practice (star edges from
+    ``lsh_star_edges`` converge in a few rounds). Each iteration is ONE
     edge-label join + ONE min-aggregation (two shuffles) and is
     ``localCheckpoint``-ed: the plan stays O(1) deep instead of growing
     by two joins per iteration (lineage blowup is what actually kills
-    iterative jobs at scale). Deterministic: min over ids, no rand.
+    iterative jobs at scale). The aggregation carries each vertex's old
+    label along, and the changed-label count is ``observe``-d on the
+    checkpoint that materializes the new labels — convergence costs no
+    join and no job of its own. Deterministic: min over ids, no rand.
 
     Raises after ``max_iters`` without convergence (a pathological
     chain longer than max_iters — raise the bound for adversarial
@@ -391,22 +430,22 @@ def duplicate_components(
         .localCheckpoint(eager=True)
     )
     for _ in range(max_iters):
+        # every neighbor-row u is also a labels row (sym is symmetric),
+        # so max("old") picks up exactly that vertex's previous label
         neighbor = (
             sym.join(
                 labels.select(F.col("u").alias("v"), F.col("c")), "v"
             ).select("u", "c")
         )
+        obs = Observation()
         new = (
-            labels.union(neighbor)
+            labels.withColumn("old", F.col("c"))
+            .unionByName(neighbor, allowMissingColumns=True)
             .groupBy("u")
-            .agg(F.min("c").alias("c"))
+            .agg(F.min("c").alias("c"), F.max("old").alias("old"))
+            .observe(obs, F.count(F.when(F.col("c") != F.col("old"), 1)).alias("changed"))
             .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "u")
-            .filter(F.col("n.c") != F.col("o.c"))
-            .count()
+            .select("u", "c")
         )
         # NOTE on the superseded frame's storage: Dataset.unpersist()
         # would be a no-op here — localCheckpoint persists the
@@ -416,7 +455,7 @@ def duplicate_components(
         # copies — narrow (id, label) rows — are live at any time,
         # bounded regardless of iteration count.
         labels = new
-        if changed == 0:
+        if obs.get["changed"] == 0:
             return labels.select(F.col("u").alias("doc_id"), F.col("c").alias("component_id"))
     raise RuntimeError(
         f"duplicate_components did not converge in {max_iters} iterations"

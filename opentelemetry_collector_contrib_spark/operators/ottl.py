@@ -360,6 +360,15 @@ def _duration_nanos(x: Column) -> Column:
     )
 
 
+def _ns_to_us(c: Column) -> Column:
+    """Nanoseconds -> microseconds via exact decimal floor division: a
+    double divide then cast('long') truncates toward zero (negative
+    sub-µs residue lands 1µs high vs Go's exact ns arithmetic) and
+    loses precision past 2^53 ns; decimal division + floor is exact
+    over the full int64 range."""
+    return F.floor(c.cast("decimal(38,0)") / F.lit(1000)).cast("long")
+
+
 def _decode(x: Column, enc) -> Column:
     """Decode (func_decode.go:35-80): base64 + IANA charsets. The flat
     string model already holds utf-8, so charset decodes that land on
@@ -504,10 +513,10 @@ CONVERTERS: dict[str, callable] = {
     "UnixMicros": lambda x: F.unix_micros(x),
     "UnixNano": lambda x: F.unix_micros(x) * 1000,
     # Unix(seconds [, nanoseconds]) -> timestamp (func_unix.go);
-    # sub-microsecond precision truncates to Spark's microsecond grain
+    # sub-microsecond precision floors to Spark's microsecond grain
     "Unix": lambda sec, nanos=None: F.timestamp_micros(
         sec.cast("long") * 1_000_000
-        + ((nanos.cast("long") / 1000).cast("long") if nanos is not None else F.lit(0))
+        + (_ns_to_us(nanos) if nanos is not None else F.lit(0))
     ),
     # Nanosecond(time) -> nanosecond component within the second
     # (func_nanosecond.go); microsecond-grain timestamps yield µs*1000
@@ -735,16 +744,6 @@ def _compile(node, ctx: _Ctx) -> Column:
                     F.unix_micros(l.cast("timestamp"))
                     - F.unix_micros(r.cast("timestamp"))
                 ) * 1000
-            # nanos -> micros via exact decimal floor division: a
-            # double divide then cast('long') truncates toward zero
-            # (negative sub-µs residue lands 1µs high vs Go's exact ns
-            # arithmetic) and loses precision past 2^53 ns; decimal
-            # division + floor is exact over the full int64 range
-            def _ns_to_us(c):
-                return F.floor(
-                    c.cast("decimal(38,0)") / F.lit(1000)
-                ).cast("long")
-
             if fl == "time":  # time ± duration -> time
                 shift = _ns_to_us(r if node.op == "+" else -r)
                 return F.timestamp_micros(

@@ -333,19 +333,22 @@ def _stage_dedup_minhash(df, spark, sf_dir, cfg):
         df, w=cfg.get("shingle_w", 3), col=cfg.get("col", "text"),
         id_col=id_col, distinct=False,
     )
-    sigs = dd.minhash_signatures(sh, k=cfg.get("minhash_k", 12), id_col=id_col)
-    pairs = dd.lsh_pairs(
-        sigs, k=cfg.get("minhash_k", 12), bands=cfg.get("lsh_bands", 4)
-    )
+    k = cfg.get("minhash_k", 12)
+    bands = cfg.get("lsh_bands", 4)
+    sigs = dd.minhash_signatures(sh, k=k, id_col=id_col)
     if cfg.get("components", False):
         # transitive-closure dedup: ONE survivor (min id) per connected
         # component of the near-dup graph — pair-wise doc_b dropping
-        # under-drops chained duplicates (A~B, B~C with no A~C pair)
-        comp = dd.duplicate_components(pairs)
+        # under-drops chained duplicates (A~B, B~C with no A~C pair).
+        # Star edges give the exact (uncapped) components in O(d) edges
+        # per bucket, where capped pairs would keep hot-bucket members.
+        edges = dd.lsh_star_edges(sigs, id_col=id_col, k=k, bands=bands)
+        comp = dd.duplicate_components(edges)
         drops = comp.filter(F.col("doc_id") != F.col("component_id")).select(
             F.col("doc_id").alias(id_col)
         )
     else:
+        pairs = dd.lsh_pairs(sigs, id_col=id_col, k=k, bands=bands)
         drops = pairs.select(F.col("doc_b").alias(id_col)).distinct()
     return df.join(drops, id_col, "left_anti")
 

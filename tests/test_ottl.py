@@ -636,6 +636,16 @@ def test_unix_and_nanosecond_converters(spark):
     assert str(out["t0"]).startswith("2023-11-14")
 
 
+def test_unix_negative_nanos_floor(spark):
+    # -1ns is 1ns BEFORE the epoch: the µs grain floors it to -1µs,
+    # never truncates it toward zero onto the epoch itself
+    d = spark.createDataFrame([(0, -1)], "sec long, nanos long")
+    out = ottl.apply_statements(d, ["set(t, Unix(sec, nanos))"]).select(
+        F.date_format("t", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("t")
+    ).collect()[0]["t"]
+    assert out == "1969-12-31 23:59:59.999999"
+
+
 def test_trim_cutset(spark):
     d = spark.createDataFrame([("xxhixx",)], ["v"])
     out = ottl.apply_statements(d, ['set(t, Trim(v, "x"))']).collect()[0]["t"]

@@ -561,6 +561,53 @@ def test_span_dedup_matches_duckdb_oracle(spark, sf_dir):
 
 # --- connected components over the near-dup pair graph ---
 
+def _duckdb_closure(pairs, ppath):
+    """Reference components: a DuckDB recursive-CTE transitive closure
+    over ``pairs`` (written to ``ppath``), as sorted (doc_id, min id)."""
+    import duckdb
+
+    pairs.write.mode("overwrite").parquet(ppath)
+    con = duckdb.connect()
+    try:
+        return sorted(
+            (int(u), int(c))
+            for u, c in con.execute(
+                f"""
+                WITH RECURSIVE edges AS (
+                  SELECT doc_a AS u, doc_b AS v FROM '{ppath}/*.parquet'
+                  UNION SELECT doc_b, doc_a FROM '{ppath}/*.parquet'
+                ), reach AS (
+                  SELECT u, v FROM edges
+                  UNION
+                  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+                )
+                SELECT u AS doc_id, least(u, min(v)) AS component_id
+                FROM reach GROUP BY u
+                """
+            ).fetchall()
+        )
+    finally:
+        con.close()
+
+
+def _union_find(edges):
+    """Reference components: pure-Python union-find over ``edges``, as
+    sorted (vertex, min id of its component) for every edge vertex."""
+    parent = {v: v for e in edges for v in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((v, find(v)) for v in parent)
+
+
 def test_duplicate_components_chain_vs_pairwise_drop(spark):
     # edges (2,3) and (1,3) only: 1-2-3 is ONE cluster via 3, but the
     # naive "drop every doc_b" rule keeps {1,2} (under-drop). The
@@ -590,37 +637,58 @@ def test_duplicate_components_matches_duckdb_closure(spark, sf_dir, tmp_path):
     # vs a DuckDB recursive-CTE transitive closure over the REAL LSH
     # pair graph (pair generation itself is oracle-checked by the
     # dedup_minhash_lsh board row)
-    import duckdb
-
     docs = docsrc.documents_df(spark, sf_dir)
     sigs = dd.minhash_signatures(dd.shingles(docs, w=3, distinct=False), k=12)
     pairs = dd.lsh_pairs(sigs, k=12, bands=4)
-    ppath = str(tmp_path / "pairs.parquet")
-    pairs.write.mode("overwrite").parquet(ppath)
     got = sorted(
         (r["doc_id"], r["component_id"])
         for r in dd.duplicate_components(pairs).collect()
     )
-    con = duckdb.connect()
-    want = sorted(
-        (int(u), int(c))
-        for u, c in con.execute(
-            f"""
-            WITH RECURSIVE edges AS (
-              SELECT doc_a AS u, doc_b AS v FROM '{ppath}/*.parquet'
-              UNION SELECT doc_b, doc_a FROM '{ppath}/*.parquet'
-            ), reach AS (
-              SELECT u, v FROM edges
-              UNION
-              SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-            )
-            SELECT u AS doc_id, least(u, min(v)) AS component_id
-            FROM reach GROUP BY u
-            """
-        ).fetchall()
-    )
-    con.close()
+    want = _duckdb_closure(pairs, str(tmp_path / "pairs.parquet"))
     assert got == want and len(got) > 0
+
+
+def test_duplicate_components_over_cap_cluster_star_edges_exact(spark, tmp_path):
+    # planted clusters whose band buckets overflow a small cap (3 stands
+    # in for the default 1000): star edges must give the EXACT uncapped
+    # components, while the capped pair graph keeps extra survivors
+    words = [f"w{i}" for i in range(40)]
+    texts = []
+    for c, size in ((0, 12), (1, 6)):
+        base = [f"c{c}{w}" for w in words]
+        texts += [" ".join(base[:-1] + [f"v{j}"]) for j in range(size)]
+    texts += [" ".join(f"o{i}{w}" for w in words) for i in range(3)]
+    df = spark.createDataFrame(list(enumerate(texts, 1)), ["doc_id", "text"])
+    sigs = dd.minhash_signatures(
+        dd.shingles(df, w=3, distinct=False), k=12
+    ).cache()
+
+    got = sorted(
+        (r["doc_id"], r["component_id"])
+        for r in dd.duplicate_components(dd.lsh_star_edges(sigs)).collect()
+    )
+    exact_pairs = dd.lsh_pairs(sigs, max_band_size=None)
+    assert got == _union_find(
+        [(r["doc_a"], r["doc_b"]) for r in exact_pairs.collect()]
+    )
+    assert got == _duckdb_closure(exact_pairs, str(tmp_path / "pairs.parquet"))
+
+    capped = dd.duplicate_components(dd.lsh_pairs(sigs, max_band_size=3))
+    exact_survivors = len(texts) - sum(1 for d, c in got if d != c)
+    capped_survivors = len(texts) - capped.filter(
+        F.col("doc_id") != F.col("component_id")
+    ).count()
+    assert capped_survivors > exact_survivors
+    sigs.unpersist()
+
+
+def test_duplicate_components_raises_without_convergence(spark):
+    # a 6-node path needs more than two label-propagation rounds
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(10, 15)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2"):
+        dd.duplicate_components(pairs, max_iters=2).collect()
 
 
 def test_config_pipeline_minhash_components_drop_rule(spark):
@@ -661,20 +729,7 @@ def test_duplicate_components_matches_union_find(spark, seed):
             for _ in range(rng.randint(5, 60))
         }
     )
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    vertices = {v for e in edges for v in e}
-    want = sorted((v, find(v)) for v in vertices)
+    want = _union_find(edges)
 
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     got = sorted(
