@@ -5,15 +5,13 @@ scaling efficiency >= 0.8) cannot use a real cluster in this sandbox;
 the sanctioned stand-in is the same job at two local parallelism levels
 on the same input:
 
-    python BENCH/scaling.py          # local[2] vs local[8] by default
+    python BENCH/scaling.py          # local[N/4] vs local[N], N = nproc
 
 Each level runs in its OWN subprocess/JVM (master is fixed at session
-start). Levels default to 2 and 8 because this host exposes 32 vCPUs
-but saturates at ~16 hardware threads (SMT): a CPU-bound burn test
-measures only ~2x aggregate gain from 8->32 workers, so no job however
-well it scales can show 4x there; 2->8 is inside the machine's linear
-region. Override with SPARK_GRAFT_SCALE_LEVELS=8,32 to see the
-SMT-saturated pair.
+start). Levels default to a quarter of the host's CPUs and all of them
+(1 and 4 on a 4-vCPU host), the widest "N vs 4N" pair the host can run
+physically; each JVM's heap is min(4g, RAM/8) (``perfbench.host``).
+Override the levels with SPARK_GRAFT_SCALE_LEVELS=2,8 on a larger host.
 
 The measured job is the flagship parse -> enrich -> route -> aggregate
 pipeline reading a pre-materialized parquet transcript table
@@ -37,6 +35,9 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from perfbench.host import heap_mb, nproc  # noqa: E402
 
 
 def _make_spark(cpus: int, app: str):
@@ -47,7 +48,7 @@ def _make_spark(cpus: int, app: str):
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(max(4 * cpus, 16)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", f"{heap_mb()}m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
@@ -63,7 +64,7 @@ def prepare_input(input_dir: str) -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     rep = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "16"))
-    spark = _make_spark(8, "scaling-prepare")
+    spark = _make_spark(nproc(), "scaling-prepare")
     base = src.transcripts_df(spark, sf_dir)
     reps = spark.range(rep).select(F.col("id").alias("_rep"))
     turns = (
@@ -184,9 +185,11 @@ def main() -> None:
     if len(sys.argv) > 3 and sys.argv[1] == "--worker":
         worker(int(sys.argv[2]), sys.argv[3])
         return
+    n = nproc()
+    default_levels = f"{max(1, n // 4)},{n}"
     levels = [
         int(x)
-        for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "2,8").split(",")
+        for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", default_levels).split(",")
     ]
     input_dir = os.environ.get("SPARK_GRAFT_SCALE_INPUT", "/tmp/scaling_input")
     rounds = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "3"))

@@ -38,13 +38,14 @@ def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
     from opentelemetry_collector_contrib_spark.plans import ordering
+    from perfbench.host import heap_mb, nproc
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{nproc()}]")
         .appName("skew-bench")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{heap_mb()}m")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

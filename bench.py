@@ -1,5 +1,9 @@
 """Bench driver: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
 
+Cores default to every CPU this process may run on and the driver heap
+to min(4g, RAM/8), the sizing rule of ``perfbench.host`` and the test
+fixture.
+
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "turns_per_sec": ...}
@@ -19,6 +23,8 @@ import time
 
 from pyspark.sql import SparkSession
 
+from perfbench.host import heap_mb, nproc
+
 
 def make_spark(cpus: int, app: str = "otelcol-spark-bench") -> SparkSession:
     return (
@@ -29,7 +35,7 @@ def make_spark(cpus: int, app: str = "otelcol-spark-bench") -> SparkSession:
         # bigger Arrow batches amortize the IPC boundary for pandas-UDF
         # stages (measured: ~20% off the warm Arrow parse at 64k vs 10k)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{heap_mb()}m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
@@ -123,7 +129,7 @@ def input_rows(spark: SparkSession, sf_dir: str) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or nproc())
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1"))
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 

@@ -17,6 +17,8 @@ __all__ = [
     "Route",
     "route_logs",
     "routed_union",
+    "route_count_metrics",
+    "sink_counts",
     "count_connector",
     "sum_connector",
     "MetricSpec",
@@ -104,7 +106,12 @@ def route_logs(
         k8sattributes informer-cache shape.
       * ``window``: ``max(cond) OVER (PARTITION BY conv)`` — one full
         shuffle of the fact table; correct fallback when the matching
-        conv set itself could be too large to broadcast.
+        conv set itself could be too large to broadcast. When the input
+        is already clustered and sorted on ``conv_col`` (the transcript
+        source's own window leaves it so, and narrow stages and
+        broadcast joins keep it), the window reuses that layout and
+        costs no shuffle and no sort — cheaper than ``broadcast``,
+        which derives the input a second time.
     """
     conds: list[tuple[Column, str]] = []
     sink_map: dict[str, list[str]] = {}
@@ -177,6 +184,26 @@ def routed_union(tagged: DataFrame, sink_map: dict[str, list[str]]) -> DataFrame
         )
     out = tagged.withColumn("sink", F.explode(expr))
     return out.drop("_route")
+
+
+def route_count_metrics(sink_map: dict[str, list[str]]) -> dict[str, Column]:
+    """One ``count_if`` per route label, to ``observe`` on the tagged
+    frame: per-route counts that ride along with whatever action runs
+    the frame (obsreport's accepted counters), not a second pass."""
+    return {label: F.count_if(F.col("_route") == label) for label in sink_map}
+
+
+def sink_counts(
+    route_counts: dict[str, int], sink_map: dict[str, list[str]]
+) -> dict[str, int]:
+    """Fold observed per-route counts through ``sink_map`` into rows per
+    sink — what ``routed_union(...).groupBy("sink").count()`` returns:
+    sinks sorted, sinks that received no rows left out."""
+    per_sink: dict[str, int] = {}
+    for label, sinks in sink_map.items():
+        for s in sinks:
+            per_sink[s] = per_sink.get(s, 0) + route_counts[label]
+    return {s: n for s, n in sorted(per_sink.items()) if n}
 
 
 def write_routed(

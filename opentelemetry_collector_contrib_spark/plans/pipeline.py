@@ -11,14 +11,21 @@ does (SURVEY.md north rule):
     -> routing connector (first-match-wins tag; resource-context route)
     -> per-sink exporters + count/sum connectors
 
-Scale design (local[32] here, 1000 executors in spirit):
-  * The fact table is never shuffled before routing: parse/enrich/tag are
-    all narrow (dims broadcast).  `.explain` shows one WholeStageCodegen
-    span from scan to tag when using the native parse path.
+Scale design: one scan of ``events``, one shuffle, one write.
+  * The only exchange is the source's own ``PARTITION BY conv_id``
+    window (``sources.transcripts``). Parse and enrich are narrow (dims
+    broadcast), so the data stays clustered and sorted on conv_id, and
+    the resource-context route is a window over conv_id that reuses
+    that exchange: no second derivation of the source, no extra
+    shuffle, no sort.
   * Order-sensitive stages (recombine, per-turn equality) sort an array
     per group instead of trusting shuffle order — correct on any cluster.
-  * Aggregations are map-side partial; per-sink writes use a single
-    partitionBy("sink") job rather than N filtered scans.
+  * ``run`` executes ONE action: the per-sink write (or a noop drain
+    without an output dir). Per-route counts are ``observe``d on the
+    tagged frame during that action and folded through the sink map
+    into the per-sink counts, so counting costs no pass of its own.
+    Per-sink writes use a single partitionBy("sink") job rather than N
+    filtered scans.
 """
 
 from __future__ import annotations
@@ -105,10 +112,12 @@ def build(
             name="risky_tools",
         ),
     ]
+    # the window strategy reuses the source's conv_id exchange (see the
+    # module docstring); broadcast would derive the source a second time
     tagged, sink_map = connectors.route_logs(
-        enriched, routes, default_sinks=["catchall"]
+        enriched, routes, default_sinks=["catchall"], resource_strategy="window"
     )
-    tagged = lin.observe(tagged, "route")
+    tagged = lin.observe(tagged, "route", **connectors.route_count_metrics(sink_map))
 
     return PipelineResult(parsed, enriched, tagged, sink_map, lin)
 
@@ -147,18 +156,26 @@ def run(
     parse_mode: str = "native",
     with_histograms: bool = False,
 ) -> dict:
-    """Execute end-to-end; optionally write per-sink tables; return metrics.
+    """Execute end-to-end in one action; optionally write per-sink
+    tables; return metrics.
 
+    The action is ``write_routed`` when ``out_dir`` is set, otherwise a
+    noop drain. ``per_sink_counts`` comes from the per-route counts the
+    ``route`` observation collects during that action.
     ``with_histograms`` adds the full metric block (per-sink counts +
     per-sink/role + per-tool histograms) computed in one extra pass via
     the multi-metric connector, under ``out["metrics"]``."""
     result = build(spark, sf_dir, parse_mode=parse_mode)
-    counts = {r["sink"]: r["n"] for r in per_sink_counts(result).collect()}
+    if out_dir:
+        paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
+    else:
+        connectors.drop_export(result.tagged)
+    lineage = result.lineage.collect()
+    counts = connectors.sink_counts(lineage["route"], result.sink_map)
     out = {"per_sink_counts": counts}
     if with_histograms:
         out["metrics"] = [r.asDict() for r in pipeline_metrics(result).collect()]
     if out_dir:
-        paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
         out["sink_paths"] = paths
-    out["lineage"] = result.lineage.collect()
+    out["lineage"] = lineage
     return out

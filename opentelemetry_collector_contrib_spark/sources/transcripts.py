@@ -29,11 +29,19 @@ BASE_TABLES = ("events", "customer")
 # ---------------------------------------------------------------------------
 # transcripts: one row per turn. turn_idx is dense 0..n-1 per conv_id,
 # ordered by event_id (unique => total order, deterministic in both engines).
+#
+# The window partitions on conv_id itself, computed in the subquery, not
+# on user_id: lpad truncates ids of 9+ digits to 8 characters, so two
+# user_ids can share one conv_id, and only a conv_id window keeps
+# turn_idx dense per conversation for them. It also leaves the Spark
+# output hash-partitioned and sorted on conv_id, so a later
+# conversation-wide window (the resource-context route) reuses this
+# exchange instead of adding one.
 # ---------------------------------------------------------------------------
 TRANSCRIPTS_SQL = """
 SELECT
-  'conv-' || lpad(cast(user_id AS string), 8, '0') AS conv_id,
-  cast(row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1 AS int)
+  conv_id,
+  cast(row_number() OVER (PARTITION BY conv_id ORDER BY event_id) - 1 AS int)
     AS turn_idx,
   CASE cast(event_id % 4 AS int)
     WHEN 0 THEN 'user' WHEN 1 THEN 'assistant'
@@ -59,7 +67,12 @@ SELECT
     WHEN 0 THEN 'bash' WHEN 1 THEN 'search'
     WHEN 2 THEN 'browser' WHEN 3 THEN 'editor' ELSE '' END AS tool,
   ts
-FROM events
+FROM (
+  SELECT
+    'conv-' || lpad(cast(user_id AS string), 8, '0') AS conv_id,
+    event_id, user_id, event_type, props, value, ts
+  FROM events
+) AS e
 """
 
 # ---------------------------------------------------------------------------
@@ -92,14 +105,15 @@ SELECT * FROM (VALUES
 """
 
 
-def register_base_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the parquet base tables as temp views (idempotent)."""
-    for name in BASE_TABLES:
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
+def register_view(spark: SparkSession, sf_dir: str, name: str) -> None:
+    """Register one parquet base table as a temp view (idempotent). Each
+    ``spark.read.parquet`` costs a schema-inference job, so a derivation
+    registers only the table it reads."""
+    spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
 
 
 def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_base_views(spark, sf_dir)
+    register_view(spark, sf_dir, "events")
     return spark.sql(TRANSCRIPTS_SQL)
 
 
@@ -116,7 +130,7 @@ def with_file_attrs(df: DataFrame) -> DataFrame:
 
 
 def conv_dim_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_base_views(spark, sf_dir)
+    register_view(spark, sf_dir, "customer")
     return spark.sql(CONV_DIM_SQL)
 
 

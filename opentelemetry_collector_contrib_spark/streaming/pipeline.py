@@ -12,8 +12,10 @@ Reference mapping:
     `availableNow` in tests/backfills).
   * per-sink exporters -> foreachBatch writing one partitionBy("sink")
     parquet job per micro-batch, plus per-sink running counts.
-  * obsreport accepted/sent counters -> per-batch metrics rows appended
-    to a metrics table by foreachBatch.
+  * obsreport accepted/sent counters -> per-route counts observed on
+    the micro-batch's sink write, folded into per-sink rows on the
+    driver and appended to a metrics table by foreachBatch (no second
+    pass over the micro-batch).
 
 The stage functions are the SAME code as batch (parsers/processors/
 connectors modules): everything in the hot path is a narrow column
@@ -30,13 +32,32 @@ below shows the watermarked variant Spark adds for free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..operators import connectors, parsers, processors
 from ..schema import PARSE_PATTERN, PARSE_GROUPS, TRANSCRIPT_SCHEMA
 from ..sources import transcripts as src
 
 __all__ = ["read_transcript_stream", "build_stream", "run_to_sinks", "log_dedup_stream"]
+
+#: the per-batch ``metrics`` table: rows per sink in one micro-batch
+#: (the types the former ``groupBy("sink").count()`` rows had, so
+#: appends to an existing table keep working)
+METRICS_SCHEMA = StructType(
+    [
+        StructField("sink", StringType()),
+        StructField("n", LongType()),
+        StructField("batch_id", IntegerType()),
+    ]
+)
 
 
 def read_transcript_stream(
@@ -108,23 +129,25 @@ def run_to_sinks(
         spark, read_transcript_stream(spark, input_dir), sf_dir
     )
 
+    route_counts = [
+        c.alias(k) for k, c in connectors.route_count_metrics(sink_map).items()
+    ]
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = connectors.routed_union(batch_df, sink_map)
-        routed.persist()
-        try:
-            routed.write.mode("append").partitionBy("sink").parquet(
-                f"{out_dir}/routed"
-            )
-            # obsreport-style per-batch counters
-            (
-                routed.groupBy("sink")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(f"{out_dir}/metrics")
-            )
-        finally:
-            routed.unpersist()
+        # obsreport-style per-batch counters: per-route counts observed
+        # on the sink write itself, folded into rows per sink on the
+        # driver — the micro-batch is computed once
+        obs = Observation()
+        routed = connectors.routed_union(batch_df.observe(obs, *route_counts), sink_map)
+        routed.write.mode("append").partitionBy("sink").parquet(f"{out_dir}/routed")
+        counts = connectors.sink_counts(obs.get, sink_map)
+        # literal rows make the write one JVM-only task; createDataFrame
+        # from a Python list would add a Python-RDD scan per micro-batch
+        rows = [F.struct(F.lit(s), F.lit(n), F.lit(batch_id)) for s, n in counts.items()]
+        metrics = F.inline(F.array(*rows).cast(ArrayType(METRICS_SCHEMA)))
+        spark.range(1, numPartitions=1).select(metrics).write.mode("append").parquet(
+            f"{out_dir}/metrics"
+        )
 
     writer = (
         tagged.writeStream.foreachBatch(write_batch)

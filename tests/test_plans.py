@@ -62,6 +62,120 @@ def test_pipeline_run_writes_readable_sinks(spark, sf_dir, tmp_path):
     assert total == sum(res["per_sink_counts"].values())
 
 
+def test_pipeline_run_counts_from_observation(spark, sf_dir, tmp_path):
+    """run() counts per sink from the route observation on its one
+    action — the write, or a noop drain without an output dir — and the
+    result equals the standalone countconnector pass."""
+    want = {
+        r["sink"]: r["n"]
+        for r in pipeline.per_sink_counts(pipeline.build(spark, sf_dir)).collect()
+    }
+    assert pipeline.run(spark, sf_dir)["per_sink_counts"] == want
+    written = pipeline.run(spark, sf_dir, out_dir=str(tmp_path))
+    assert written["per_sink_counts"] == want
+    assert list(want) == sorted(want) and all(want.values())
+
+
+def test_flagship_plan_one_scan_one_exchange(spark, sf_dir):
+    """The routed flagship reads events once and shuffles once: the
+    resource-context route reuses the source's conv_id exchange instead
+    of deriving the source again for a broadcast semi-join."""
+    res = pipeline.build(spark, sf_dir)
+    routed = connectors.routed_union(res.tagged, res.sink_map)
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    body = plan.split("== Initial Plan ==")[0]
+    lines = body.splitlines()
+    scans = [l for l in lines if "FileScan" in l and "events.parquet" in l]
+    exchanges = [l for l in lines if "Exchange hashpartitioning" in l]
+    assert len(scans) == 1, body
+    assert len(exchanges) == 1, body
+
+
+def test_route_lineage_counts_per_label(spark, sf_dir):
+    res = pipeline.build(spark, sf_dir)
+    connectors.drop_export(res.tagged)
+    route = res.lineage.collect()["route"]
+    labels = {k: v for k, v in route.items() if k != "rows"}
+    assert set(labels) == set(res.sink_map)
+    assert sum(labels.values()) == route["rows"]
+
+
+def test_sink_counts_fold_matches_routed_union(spark, turns):
+    routes = [
+        connectors.Route(F.col("role") == "tool", ["a", "b"], "log", "tools"),
+        connectors.Route(F.col("role") == "nobody", ["c"], "log", "none"),
+        connectors.Route(F.col("role") == "user", ["b"], "log", "users"),
+    ]
+    tagged, sink_map = connectors.route_logs(turns, routes)
+    metrics = connectors.route_count_metrics(sink_map)
+    by_route = tagged.agg(*[c.alias(k) for k, c in metrics.items()]).first().asDict()
+    want = {
+        r["sink"]: r["count"]
+        for r in connectors.routed_union(tagged, sink_map).groupBy("sink").count().collect()
+    }
+    assert connectors.sink_counts(by_route, sink_map) == dict(sorted(want.items()))
+    assert "c" not in want
+
+
+def test_transcripts_dense_turns_on_colliding_conv_ids(spark, tmp_path):
+    """lpad truncates user_ids of 9+ digits, so 123456780 and 123456781
+    both become conv-12345678; turn_idx must still be unique and dense
+    per conv_id, in Spark and in the DuckDB oracle alike."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime.datetime(2024, 1, 1)
+    users = [123456780, 123456781, 123456780, 42, 123456781, 42, 123456780]
+    events = pa.table(
+        {
+            "event_id": pa.array(range(len(users)), pa.int64()),
+            "ts": pa.array(
+                [t0 + datetime.timedelta(seconds=i) for i in range(len(users))],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array(users, pa.int64()),
+            "event_type": ["click", "error", "signup", "click", "purchase", "error", "view"],
+            "value": pa.array([float(i) for i in range(len(users))]),
+            "props": ["{}"] * len(users),
+        }
+    )
+    customer = pa.table(
+        {
+            "c_custkey": pa.array([42], pa.int64()),
+            "c_name": ["c42"],
+            "c_nationkey": pa.array([1], pa.int32()),
+            "c_acctbal": [0.0],
+            "c_mktsegment": ["m"],
+        }
+    )
+    d = str(tmp_path)
+    pq.write_table(events, f"{d}/events.parquet")
+    pq.write_table(customer, f"{d}/customer.parquet")
+
+    spark_rows = [
+        (r["conv_id"], r["turn_idx"])
+        for r in src.transcripts_df(spark, d).select("conv_id", "turn_idx").collect()
+    ]
+    con = duckdb.connect()
+    for t in src.BASE_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    duck_rows = con.execute(
+        src.oracle_ctes() + "SELECT conv_id, turn_idx FROM transcripts"
+    ).fetchall()
+    con.close()
+    for rows in (spark_rows, duck_rows):
+        per_conv: dict[str, list[int]] = {}
+        for conv, idx in rows:
+            per_conv.setdefault(conv, []).append(idx)
+        assert sorted(per_conv) == ["conv-00000042", "conv-12345678"]
+        for idxs in per_conv.values():
+            assert sorted(idxs) == list(range(len(idxs)))
+    assert sorted(spark_rows) == sorted(duck_rows)
+
+
 def test_resource_route_strategies_agree(spark, turns):
     routes = [
         connectors.Route(F.col("text").contains("FATAL"), ["inc"], "resource", "inc"),
