@@ -8,7 +8,7 @@ multi-executor cluster):
         --conf spark.sql.adaptive.enabled=true \
         opentelemetry_collector_contrib_spark/cli.py \
         --input-dir /data/sf --out-dir /data/out [--streaming] \
-        [--checkpoint-dir /data/ck] [--parse-mode native|arrow]
+        [--checkpoint-dir /data/ck]
 
 In local mode (no cluster manager) the same file runs directly:
     python -m opentelemetry_collector_contrib_spark.cli --input-dir ... --out-dir ...
@@ -34,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--dims-dir", default=None,
                     help="directory for enrichment dims (default: --input-dir)")
     ap.add_argument("--checkpoint-dir", default=None)
-    ap.add_argument("--parse-mode", choices=["native", "arrow"], default="native")
     ap.add_argument("--streaming", action="store_true")
     ap.add_argument("--trigger", default="availableNow",
                     help="availableNow | processingTime:<interval>")
@@ -86,7 +85,7 @@ def main(argv: list[str] | None = None) -> int:
 
     res = pipeline.run(
         spark, args.input_dir, out_dir=args.out_dir,
-        parse_mode=args.parse_mode, with_histograms=args.with_histograms,
+        with_histograms=args.with_histograms,
     )
     print(json.dumps(res, default=str))
     return 0

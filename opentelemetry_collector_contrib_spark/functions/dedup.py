@@ -308,7 +308,8 @@ def span_dedup(
     Output: one row per document that keeps >=1 sentence —
     ``(id_col, clean_text, n_kept, n_removed)``. A document whose every
     sentence is covered by later-occurrence spans disappears (C4 drops
-    emptied pages).
+    emptied pages). Documents with zero sentences (empty or
+    whitespace-only text) are dropped too: the function is also a gate.
 
     Determinism: "first occurrence" is the minimum ``(doc id, start
     position)`` per span hash — a total order, so the survivor set is

@@ -269,10 +269,9 @@ def _stage_repetition_gates(df, spark, sf_dir, cfg):
     from ..functions import text as tx
 
     # compute ONLY the n-gram families a configured threshold actually
-    # gates (same trick as functions.corpus.clean_corpus): each family
-    # rides the (doc, n, term) explode+shuffle, so defaulting to all
-    # five would push ~5x the token volume through the exchange for
-    # gates nobody asked for
+    # gates: each family rides the (doc, n, term) explode+shuffle, so
+    # defaulting to all five would push ~5x the token volume through
+    # the exchange for gates nobody asked for
     top_ns = tuple(n for n in (2, 3, 4) if f"max_top{n}gram_frac" in cfg)
     dup_ns = tuple(n for n in (5, 10) if f"max_dup{n}gram_frac" in cfg)
     reps = tx.repetition_signals(
@@ -523,8 +522,9 @@ def _stage_span_dedup(df, spark, sf_dir, cfg):
     """C4 three-sentence-span dedup (Raffel et al. 2020 §2.2) as a
     composable stage: REWRITES the text column in place (first global
     occurrence of a span survives, later ones are cut) and drops
-    documents the rewrite empties. Other columns flow through via the
-    id join."""
+    documents the rewrite empties. It is also a gate: documents with
+    zero sentences (empty or whitespace-only text) are dropped. Other
+    columns flow through via the id join."""
     from ..functions import dedup as dd
 
     id_col = cfg.get("id_col", "doc_id")
@@ -610,6 +610,28 @@ STAGE_REGISTRY = {
 }
 
 
+#: keys a stage reads without a default, checked before any stage runs;
+#: a tuple entry means "one of", a callable derives them from the stage
+REQUIRED_KEYS = {
+    "regex_parser": ("pattern", "groups"),
+    "grok_parser": ("pattern",),
+    "csv_parser": ("header",),
+    "json_parser": ("schema",),
+    "logdedup": ("key_cols",),
+    "attributes": ("actions",),
+    "enrich": ("dim", "on"),
+    "groupbyattrs": ("keys",),
+    "ottl": ("statements",),
+    "filter": ("drop_where",),
+    "resource_detect": ("detectors",),
+    "decontaminate": (("eval_path", "eval_where"),),
+    "dsir_select": ("k", ("target_path", "target_where")),
+    "sample": lambda p: () if "strata_col" in p else ("k",),
+    "checkpoint": lambda p: ("path",) if p.get("mode") == "parquet" else (),
+    "pack_sequences": ("budget",),
+}
+
+
 def load_config(path: str) -> dict:
     """Load a pipeline config from YAML or JSON — the collector-YAML
     entry point. YAML is optional (json fallback keeps the engine free
@@ -636,19 +658,34 @@ def build_from_config(
 ) -> tuple[DataFrame, dict[str, list[str]]]:
     """Compile a config dict to (tagged DataFrame, sink_map).
 
+    A stage with ``"observe": "<name>"`` records its output row count
+    (plus ``parse_errors`` on a parser stage whose frame carries
+    ``parse_ok``) as lineage stage ``<name>``; a routed batch frame is
+    always observed as ``route`` with one count per route label. No
+    observation is attached to a streaming frame.
+
     ``request_metadata`` feeds request-context routes (``context:
     request`` entries keep their condition as the raw
     ``request["k"] == "v"`` string, resolved per run on the driver)."""
     lin = lineage or Lineage()
     # validate the WHOLE config before any stage runs — including
-    # operators nested inside logstransform — so a typo'd type can
-    # never fail mid-job after upstream side-effecting stages (eager
-    # checkpoint writes) already executed
+    # operators nested inside logstransform — so a typo'd type or a
+    # missing key can never fail mid-job after upstream side-effecting
+    # stages (eager checkpoint writes) already executed
     def _check(entries, what):
-        for p in entries:
-            if p["type"] not in STAGE_REGISTRY:
-                raise ValueError(f"unknown {what} type {p['type']!r}")
-            if p["type"] == "logstransform":
+        for i, p in enumerate(entries):
+            t = p["type"]
+            if t not in STAGE_REGISTRY:
+                raise ValueError(f"unknown {what} type {t!r}")
+            req = REQUIRED_KEYS.get(t, ())
+            for key in req(p) if callable(req) else req:
+                alts = key if isinstance(key, tuple) else (key,)
+                if not any(a in p for a in alts):
+                    raise ValueError(
+                        f"{what} {i} ({t!r}) is missing required key "
+                        + " or ".join(map(repr, alts))
+                    )
+            if t == "logstransform":
                 _check(p.get("operators", []), "logstransform operator")
             elif "operators" in p:
                 # only logstransform executes a nested operator list —
@@ -656,16 +693,25 @@ def build_from_config(
                 # then silently ignores
                 raise ValueError(
                     f"'operators' is only valid under logstransform, "
-                    f"found on {p['type']!r}"
+                    f"found on {t!r}"
                 )
 
     _check(config.get("processors", []), "processor")
 
     df = source if source is not None else src.transcripts_df(spark, sf_dir)
-    for i, p in enumerate(config.get("processors", [])):
+    # Spark cannot observe a streaming Dataset; streaming counts come
+    # from the per-micro-batch observation on the sink write
+    observe = not df.isStreaming
+    for p in config.get("processors", []):
         df = STAGE_REGISTRY[p["type"]](df, spark, sf_dir, p)
-        if p.get("observe"):
-            df = lin.observe(df, f"{i}:{p['type']}")
+        if observe and p.get("observe"):
+            # a parser stage also counts the rows its parse failed
+            extra = (
+                {"parse_errors": F.sum((~F.col("parse_ok")).cast("long"))}
+                if p["type"].endswith("_parser") and "parse_ok" in df.columns
+                else {}
+            )
+            df = lin.observe(df, p["observe"], **extra)
 
     routes = [
         connectors.Route(
@@ -681,11 +727,17 @@ def build_from_config(
         )
         for r in config.get("routes", [])
     ]
-    if routes:
-        return connectors.route_logs(
-            df, routes,
-            default_sinks=config.get("default_sinks"),
-            resource_strategy=config.get("resource_strategy", "broadcast"),
-            request_metadata=request_metadata,
+    if not routes:
+        return df, {}
+    tagged, sink_map = connectors.route_logs(
+        df, routes,
+        default_sinks=config.get("default_sinks"),
+        resource_strategy=config.get("resource_strategy", "broadcast"),
+        request_metadata=request_metadata,
+    )
+    if observe:
+        # per-route counts ride along with whatever action runs the frame
+        tagged = lin.observe(
+            tagged, "route", **connectors.route_count_metrics(sink_map)
         )
-    return df, {}
+    return tagged, sink_map

@@ -19,6 +19,8 @@ class Lineage:
     """Collects per-stage row counters without extra passes."""
 
     observations: dict[str, Observation] = field(default_factory=dict)
+    #: the observed frame per stage, for callers that run a stage prefix
+    frames: dict[str, DataFrame] = field(default_factory=dict)
 
     def observe(self, df: DataFrame, stage: str, **extra) -> DataFrame:
         """Attach rows_in/rows_out style metrics to a stage boundary.
@@ -30,7 +32,8 @@ class Lineage:
         self.observations[stage] = obs
         metrics = [F.count(F.lit(1)).alias("rows")]
         metrics += [c.alias(n) for n, c in extra.items()]
-        return df.observe(obs, *metrics)
+        self.frames[stage] = df.observe(obs, *metrics)
+        return self.frames[stage]
 
     def collect(self) -> dict[str, dict]:
         """Metric values for all stages whose job has completed."""

@@ -1,7 +1,8 @@
 """The flagship parse -> enrich -> route -> aggregate pipeline.
 
-This composes the operator stages exactly as the reference's logs path
-does (SURVEY.md north rule):
+``FLAGSHIP`` declares the operator stages exactly as the reference's
+logs path does (SURVEY.md north rule), and ``build`` compiles it with
+the one stage compiler, ``config_pipeline.build_from_config``:
 
   filelog receiver (transcripts source)
     -> regex_parser (vectorized; on_error=send => parse_ok column)
@@ -30,13 +31,13 @@ Scale design: one scan of ``events``, one shuffle, one write.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import connectors, parsers, processors
-from ..schema import PARSE_PATTERN, PARSE_GROUPS, PARSE_PATTERN_NAMED
-from ..sources import transcripts as src
+from ..operators import connectors
+from ..schema import PARSE_PATTERN, PARSE_GROUPS
+from .config_pipeline import build_from_config
 from .lineage import Lineage
 
 
@@ -49,77 +50,46 @@ class PipelineResult:
     lineage: Lineage
 
 
-DEFAULT_ROUTES = [
-    # 1) row-level: ERROR/FATAL turns -> errors + audit (route duplication)
-    dict(name="errors", context="log", sinks=["errors", "audit"]),
-    # 2) resource-level: any FATAL in the conversation -> whole conv to incident
-    dict(name="incident", context="resource", sinks=["incident"]),
-    # 3) row-level: risky tool usage
-    dict(name="risky_tools", context="log", sinks=["risky_tools"]),
-]
+#: the flagship as one stage config, compiled by ``build_from_config``
+#: for batch (here) and streaming (its log-context routes); the
+#: ``observe`` values name the lineage stages ``parse`` and ``enrich``
+FLAGSHIP = {
+    "processors": [
+        # regex_parser; on_error=send => parse_ok column
+        {"type": "regex_parser", "pattern": PARSE_PATTERN, "groups": PARSE_GROUPS},
+        {"type": "key_value_parser", "parse_from": "msg", "out": "kv"},
+        {"type": "severity_parser", "parse_from": "level", "observe": "parse"},
+        # k8sattributes analog, conv -> tool cascade
+        {"type": "enrich", "dim": "conv_dim", "on": "conv_id"},
+        {"type": "enrich", "dim": "tool_dim", "on": "tool", "observe": "enrich"},
+    ],
+    "routes": [
+        # row-level: ERROR/FATAL turns -> errors + audit (route duplication)
+        {"name": "errors", "condition": "level IN ('ERROR','FATAL')",
+         "context": "log", "sinks": ["errors", "audit"]},
+        # resource-level: any FATAL in the conversation -> whole conv
+        {"name": "incident", "condition": "level = 'FATAL'",
+         "context": "resource", "sinks": ["incident"]},
+        {"name": "risky_tools", "condition": "tool <> '' AND risk_tier = 'high'",
+         "context": "log", "sinks": ["risky_tools"]},
+    ],
+    "default_sinks": ["catchall"],
+    # the window strategy reuses the source's conv_id exchange (see the
+    # module docstring); broadcast would derive the source a second time
+    "resource_strategy": "window",
+}
 
 
 def build(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    parse_mode: str = "native",
-    lineage: Lineage | None = None,
+    spark: SparkSession, sf_dir: str, *, lineage: Lineage | None = None
 ) -> PipelineResult:
-    """Assemble the full logical plan; nothing executes until an action."""
+    """Compile ``FLAGSHIP`` to its logical plan; nothing executes until
+    an action."""
     lin = lineage or Lineage()
-
-    turns = src.transcripts_df(spark, sf_dir)
-
-    # ---- parse stage (regex_parser; on_error=send) ----
-    if parse_mode == "arrow":
-        parsed = parsers.regex_parse_arrow(turns, PARSE_PATTERN_NAMED)
-    else:
-        parsed = parsers.regex_parse(turns, PARSE_PATTERN, PARSE_GROUPS)
-    parsed = parsers.key_value_parse(
-        parsed, parse_from="msg", pair_delim=" ", kv_delim="=", out="kv"
+    tagged, sink_map = build_from_config(spark, sf_dir, FLAGSHIP, lineage=lin)
+    return PipelineResult(
+        lin.frames["parse"], lin.frames["enrich"], tagged, sink_map, lin
     )
-    parsed = parsers.severity_parse(parsed, parse_from="level")
-    parsed = lin.observe(
-        parsed, "parse", parse_errors=F.sum((~F.col("parse_ok")).cast("long"))
-    )
-
-    # ---- enrich stage (k8sattributes analog, conv -> tool cascade) ----
-    conv_dim = src.conv_dim_df(spark, sf_dir)
-    tool_dim = src.tool_dim_df(spark)
-    enriched = processors.enrich_lookup(parsed, conv_dim, on="conv_id")
-    enriched = processors.enrich_lookup(enriched, tool_dim, on="tool")
-    enriched = lin.observe(enriched, "enrich")
-
-    # ---- route stage (routing connector) ----
-    routes = [
-        connectors.Route(
-            condition=F.col("level").isin("ERROR", "FATAL"),
-            sinks=["errors", "audit"],
-            context="log",
-            name="errors",
-        ),
-        connectors.Route(
-            condition=F.col("level") == "FATAL",
-            sinks=["incident"],
-            context="resource",
-            name="incident",
-        ),
-        connectors.Route(
-            condition=(F.col("tool") != "") & (F.col("risk_tier") == "high"),
-            sinks=["risky_tools"],
-            context="log",
-            name="risky_tools",
-        ),
-    ]
-    # the window strategy reuses the source's conv_id exchange (see the
-    # module docstring); broadcast would derive the source a second time
-    tagged, sink_map = connectors.route_logs(
-        enriched, routes, default_sinks=["catchall"], resource_strategy="window"
-    )
-    tagged = lin.observe(tagged, "route", **connectors.route_count_metrics(sink_map))
-
-    return PipelineResult(parsed, enriched, tagged, sink_map, lin)
 
 
 def per_sink_counts(result: PipelineResult) -> DataFrame:
@@ -153,7 +123,6 @@ def run(
     sf_dir: str,
     out_dir: str | None = None,
     *,
-    parse_mode: str = "native",
     with_histograms: bool = False,
 ) -> dict:
     """Execute end-to-end in one action; optionally write per-sink
@@ -165,7 +134,7 @@ def run(
     ``with_histograms`` adds the full metric block (per-sink counts +
     per-sink/role + per-tool histograms) computed in one extra pass via
     the multi-metric connector, under ``out["metrics"]``."""
-    result = build(spark, sf_dir, parse_mode=parse_mode)
+    result = build(spark, sf_dir)
     if out_dir:
         paths = connectors.write_routed(result.tagged, result.sink_map, out_dir)
     else:

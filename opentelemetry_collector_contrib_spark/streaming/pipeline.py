@@ -17,13 +17,14 @@ Reference mapping:
     driver and appended to a metrics table by foreachBatch (no second
     pass over the micro-batch).
 
-The stage functions are the SAME code as batch (parsers/processors/
-connectors modules): everything in the hot path is a narrow column
-transformation or a stream-static broadcast join, both streaming-legal.
-The one batch-only construct is the resource-context route (a window
-over conv_id); streaming restricts the routing table to log-context
-routes — the reference's routing connector is likewise per-record when
-run in `log` context (connector/routingconnector/logs.go:86-100).
+The stages are the SAME config as batch (``plans.pipeline.FLAGSHIP``,
+compiled by ``plans.config_pipeline.build_from_config``): everything in
+the hot path is a narrow column transformation or a stream-static
+broadcast join, both streaming-legal. The one batch-only construct is
+the resource-context route (a window over conv_id); streaming restricts
+the routing table to log-context routes — the reference's routing
+connector is likewise per-record when run in `log` context
+(connector/routingconnector/logs.go:86-100).
 
 No event-time watermark is used, mirroring the reference's
 processing-time-only semantics (SURVEY.md §2.8); `log_dedup_stream`
@@ -42,9 +43,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators import connectors, parsers, processors
-from ..schema import PARSE_PATTERN, PARSE_GROUPS, TRANSCRIPT_SCHEMA
-from ..sources import transcripts as src
+from ..operators import connectors
+from ..plans.config_pipeline import build_from_config
+from ..plans.pipeline import FLAGSHIP
+from ..schema import TRANSCRIPT_SCHEMA
 
 __all__ = ["read_transcript_stream", "build_stream", "run_to_sinks", "log_dedup_stream"]
 
@@ -75,31 +77,15 @@ def read_transcript_stream(
 def build_stream(
     spark: SparkSession, stream: DataFrame, sf_dir: str
 ) -> tuple[DataFrame, dict[str, list[str]]]:
-    """Same logical stages as plans.pipeline.build, on a streaming DF.
+    """``plans.pipeline.FLAGSHIP`` compiled over a streaming DF.
 
-    Routing table = the log-context subset of DEFAULT_ROUTES (resource
+    Routing table = the log-context routes of ``FLAGSHIP`` (resource
     context needs a conversation-wide window -> batch only)."""
-    parsed = parsers.regex_parse(stream, PARSE_PATTERN, PARSE_GROUPS)
-    parsed = parsers.severity_parse(parsed, parse_from="level")
-    enriched = processors.enrich_lookup(
-        parsed, src.conv_dim_df(spark, sf_dir), on="conv_id"
-    )
-    enriched = processors.enrich_lookup(enriched, src.tool_dim_df(spark), on="tool")
-    routes = [
-        connectors.Route(
-            condition=F.col("level").isin("ERROR", "FATAL"),
-            sinks=["errors", "audit"],
-            context="log",
-            name="errors",
-        ),
-        connectors.Route(
-            condition=(F.col("tool") != "") & (F.col("risk_tier") == "high"),
-            sinks=["risky_tools"],
-            context="log",
-            name="risky_tools",
-        ),
-    ]
-    return connectors.route_logs(enriched, routes, default_sinks=["catchall"])
+    config = {
+        **FLAGSHIP,
+        "routes": [r for r in FLAGSHIP["routes"] if r["context"] != "resource"],
+    }
+    return build_from_config(spark, sf_dir, config, source=stream)
 
 
 def run_to_sinks(

@@ -1,5 +1,5 @@
-"""Config-driven pipeline: dict config reproduces the hand-built flagship
-pipeline exactly, and unknown stages fail at build time."""
+"""Config-driven pipeline: the flagship config round-trips through YAML,
+and unknown stages or missing keys fail at build time."""
 
 from __future__ import annotations
 
@@ -19,39 +19,6 @@ from opentelemetry_collector_contrib_spark.schema import (  # noqa: E402
     PARSE_PATTERN,
     PARSE_GROUPS,
 )
-
-FLAGSHIP_CONFIG = {
-    "processors": [
-        {"type": "regex_parser", "pattern": PARSE_PATTERN, "groups": PARSE_GROUPS},
-        {"type": "key_value_parser", "parse_from": "msg", "out": "kv"},
-        {"type": "severity_parser", "parse_from": "level"},
-        {"type": "enrich", "dim": "conv_dim", "on": "conv_id"},
-        {"type": "enrich", "dim": "tool_dim", "on": "tool"},
-    ],
-    "routes": [
-        {"name": "errors", "condition": "level IN ('ERROR','FATAL')",
-         "context": "log", "sinks": ["errors", "audit"]},
-        {"name": "incident", "condition": "level = 'FATAL'",
-         "context": "resource", "sinks": ["incident"]},
-        {"name": "risky_tools", "condition": "tool <> '' AND risk_tier = 'high'",
-         "context": "log", "sinks": ["risky_tools"]},
-    ],
-    "default_sinks": ["catchall"],
-}
-
-
-def test_config_pipeline_matches_hand_built(spark, sf_dir):
-    tagged, sink_map = cfgp.build_from_config(spark, sf_dir, FLAGSHIP_CONFIG)
-    got = {
-        r["sink"]: r["n"]
-        for r in connectors.routed_union(tagged, sink_map)
-        .groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    expect = {
-        r["sink"]: r["n"]
-        for r in pipeline.per_sink_counts(pipeline.build(spark, sf_dir)).collect()
-    }
-    assert got == expect
 
 
 def test_config_pipeline_with_ottl_and_filter(spark, sf_dir):
@@ -79,6 +46,38 @@ def test_unknown_stage_type_fails_at_build(spark, sf_dir):
         )
 
 
+@pytest.mark.parametrize(
+    "stage, missing",
+    [
+        ({"type": "decontaminate"}, "'eval_path' or 'eval_where'"),
+        ({"type": "dsir_select", "target_where": "true"}, "'k'"),
+        ({"type": "dsir_select", "k": 5}, "'target_path' or 'target_where'"),
+        ({"type": "checkpoint", "mode": "parquet"}, "'path'"),
+        ({"type": "logstransform", "operators": [{"type": "enrich", "on": "x"}]},
+         "'dim'"),
+    ],
+    ids=["decontaminate", "dsir_k", "dsir_target", "checkpoint_path", "nested"],
+)
+def test_missing_required_key_fails_at_build(spark, sf_dir, stage, missing):
+    with pytest.raises(ValueError, match=f"missing required key {missing}"):
+        cfgp.build_from_config(spark, sf_dir, {"processors": [stage]})
+
+
+def test_missing_key_fails_before_any_stage_runs(spark, sf_dir, tmp_path):
+    """A missing key on a later stage fails the build before an earlier
+    eager stage (a parquet checkpoint) writes anything."""
+    first = tmp_path / "a"
+    cfg = {
+        "processors": [
+            {"type": "checkpoint", "mode": "parquet", "path": str(first)},
+            {"type": "sample", "seed": 1},
+        ]
+    }
+    with pytest.raises(ValueError, match=r"processor 1 \('sample'\).*'k'"):
+        cfgp.build_from_config(spark, sf_dir, cfg)
+    assert not first.exists()
+
+
 def test_recombine_options(spark, sf_dir):
     from opentelemetry_collector_contrib_spark.operators import transformers
     from opentelemetry_collector_contrib_spark.sources import transcripts as src
@@ -104,7 +103,7 @@ def test_yaml_config_roundtrip(spark, sf_dir, tmp_path):
     import yaml
 
     p = tmp_path / "pipe.yaml"
-    p.write_text(yaml.safe_dump(FLAGSHIP_CONFIG))
+    p.write_text(yaml.safe_dump(pipeline.FLAGSHIP))
     cfg = cfgp.load_config(str(p))
     tagged, sink_map = cfgp.build_from_config(spark, sf_dir, cfg)
     got = {

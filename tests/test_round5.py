@@ -404,38 +404,6 @@ def test_ivf_centroids_dim512_smoke(spark):
 # --- config-driven training-data DAG -------------------------------------
 
 
-def test_config_pipeline_corpus_dag_matches_direct(spark, sf_dir):
-    from opentelemetry_collector_contrib_spark.functions import corpus
-    from opentelemetry_collector_contrib_spark.plans import config_pipeline
-    from opentelemetry_collector_contrib_spark.sources import (
-        documents as docsrc,
-    )
-
-    docs = docsrc.documents_df(spark, sf_dir)
-    cfg = {
-        "processors": [
-            {"type": "quality_gate", "min_quality": 0.5},
-            {"type": "lang_gate", "keep_lang": "en"},
-            {"type": "gopher_gates", "min_words": 30},
-            {"type": "dedup_exact"},
-            {"type": "dedup_minhash", "shingle_w": 3, "minhash_k": 12,
-             "lsh_bands": 4},
-        ]
-    }
-    via_config, sinks = config_pipeline.build_from_config(
-        spark, sf_dir, cfg, source=docs
-    )
-    assert sinks == {}
-    direct = corpus.clean_corpus(
-        docs, min_quality=0.5, keep_lang="en", shingle_w=3, minhash_k=12,
-        lsh_bands=4, gopher={"min_words": 30},
-    )
-    got = sorted(r["doc_id"] for r in via_config.select("doc_id").collect())
-    want = sorted(r["doc_id"] for r in direct.select("doc_id").collect())
-    assert got == want
-    assert len(got) > 0
-
-
 def test_config_pipeline_sample_shuffle_pack(spark, sf_dir):
     from opentelemetry_collector_contrib_spark.plans import config_pipeline
     from opentelemetry_collector_contrib_spark.sources import (

@@ -67,6 +67,15 @@ def test_stream_matches_batch_per_sink_counts(spark, sf_dir, turns, tmp_path):
     assert batch_rows == stream_rows
 
 
+def test_stream_schema_matches_batch(spark, sf_dir, turns):
+    """Streaming compiles the same flagship config as batch: the tagged
+    frames carry the same columns (the kv parse included)."""
+    from opentelemetry_collector_contrib_spark.plans import pipeline
+
+    tagged, _ = spipe.build_stream(spark, turns, sf_dir)
+    assert tagged.columns == pipeline.build(spark, sf_dir).tagged.columns
+
+
 def test_stream_checkpoint_resume_no_duplicates(spark, sf_dir, turns, tmp_path):
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     half1 = turns.filter(F.col("turn_idx") % 2 == 0)

@@ -288,18 +288,24 @@ def test_ann_ivf_partial_probe_recall_and_determinism(spark, sf_dir):
             assert abs(r["sim"] - bf_sim[key]) < 1e-9
 
 
-def test_clean_corpus_repetition_gates(spark, sf_dir):
-    """Optional Gopher gates drop repetitive docs; default-off keeps
-    the original pipeline output unchanged."""
-    from opentelemetry_collector_contrib_spark.functions import corpus as cp
+def test_repetition_gates_stage(spark, sf_dir):
+    """The Gopher repetition gates stage only removes documents, and it
+    binds on this corpus (synthetic docs repeat templates)."""
+    from opentelemetry_collector_contrib_spark.plans import config_pipeline
 
     docs = docsrc.documents_df(spark, sf_dir)
-    base_ids = {r["doc_id"] for r in cp.clean_corpus(docs).collect()}
-    gated = cp.clean_corpus(docs, max_dup_line_frac=0.0, max_top2gram_frac=0.15)
-    gated_ids = {r["doc_id"] for r in gated.collect()}
-    assert gated_ids <= base_ids  # gates only remove
-    # the gate binds on this corpus (synthetic docs repeat templates)
-    assert len(gated_ids) < len(base_ids)
+    gates = [{"type": "quality_gate"}, {"type": "lang_gate"}]
+
+    def ids(stages):
+        out, _ = config_pipeline.build_from_config(
+            spark, sf_dir, {"processors": stages}, source=docs
+        )
+        return {r["doc_id"] for r in out.select("doc_id").collect()}
+
+    base_ids = ids(gates)
+    gated_ids = ids(gates + [{"type": "repetition_gates", "max_dup_line_frac": 0.0,
+                               "max_top2gram_frac": 0.15}])
+    assert gated_ids < base_ids
 
 
 def test_ann_ivf_plan_shape(spark, sf_dir):
@@ -531,6 +537,16 @@ def test_span_dedup_first_occurrence_is_position_ordered(spark):
     out = dd.span_dedup(df).collect()[0]
     assert out["clean_text"] == s + " Interlude."
     assert out["n_removed"] == 3
+
+
+def test_span_dedup_drops_zero_sentence_documents(spark):
+    """span_dedup is also a gate: empty and whitespace-only documents
+    (zero sentences) are dropped, every other document survives."""
+    df = spark.createDataFrame(
+        [(1, "One sentence here."), (2, ""), (3, "  \n "), (4, "Other text. More.")],
+        ["doc_id", "text"],
+    )
+    assert sorted(r["doc_id"] for r in dd.span_dedup(df).collect()) == [1, 4]
 
 
 def test_span_dedup_parallelism_invariant(spark):
